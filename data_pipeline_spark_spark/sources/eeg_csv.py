@@ -303,8 +303,13 @@ def append_ingest_log(output_dir: str, run_id: str, files: list[str]) -> str:
 
 def register_curated(spark: SparkSession, output_dir: str, view: str = "eeg") -> DataFrame:
     """Catalog sync: expose the curated store to SQL (replaces the
-    reference's Glue crawler step, emr-no-vpc.py:159-169)."""
-    df = spark.read.parquet(os.path.join(output_dir, "data"))
+    reference's Glue crawler step, emr-no-vpc.py:159-169).
+
+    Merges the part files' schemas: the channel set drifts between
+    monthly batches, and an unmerged read takes its schema from the
+    path-sorted first part file, dropping every column a later batch
+    added."""
+    df = spark.read.option("mergeSchema", "true").parquet(os.path.join(output_dir, "data"))
     df.createOrReplaceTempView(view)
     return df
 

@@ -6,15 +6,20 @@ and reports, per headline query and per parquet scan: the table, the
 ReadSchema width vs the table's full width, and whether any filter
 was pushed. Exit code 1 if a scan reads a table FULL-WIDTH without
 being on the recorded exception list (queries whose semantics
-genuinely consume every column), so the audit can run as a CI pin.
+genuinely consume every column), or if fewer scans were parsed than
+there are headline plans, so the audit can run as a CI pin that
+cannot pass vacuously.
 
     python scripts/dump_plans.py && python scripts/io_audit.py
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
+
+PLANS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "PLANS.md")
 
 # top-level column counts of the fixture tables (sf-independent)
 WIDTHS = {
@@ -42,11 +47,13 @@ NARROW_OK = {"region", "nation", "embeddings"}
 
 
 def main() -> int:
-    md = open("docs/PLANS.md").read()
+    with open(PLANS) as fh:
+        md = fh.read()
     failures: list[str] = []
     n_scans = 0
     n_pushed = 0
-    for block in md.split("\n## ")[1:]:
+    blocks = md.split("\n## ")[1:]
+    for block in blocks:
         name = block.split("\n", 1)[0].strip()
         for m in re.finditer(
             r"FileScan parquet \[([^\]]*)\].*?"
@@ -71,10 +78,16 @@ def main() -> int:
                     f"({width}/{full} cols), PushedFilters=[{pushed}]"
                 )
     print(
-        f"audited {n_scans} parquet scans across headline plans; "
+        f"audited {n_scans} parquet scans across {len(blocks)} headline plans; "
         f"{n_pushed} with pushed filters; "
         f"{len(failures)} unexplained full-width reads"
     )
+    # Most headline plans scan at least one table and many scan
+    # several, so fewer scans than plans means the FileScan pattern no
+    # longer matches the dump (an explain-format change) and the
+    # audit above checked nothing.
+    if n_scans < max(1, len(blocks)):
+        failures.append(f"parsed {n_scans} parquet scans from {len(blocks)} headline plans")
     for f in failures:
         print("  FAIL", f)
     return 1 if failures else 0

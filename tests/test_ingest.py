@@ -207,3 +207,29 @@ def test_ingest_at_reference_width(spark, tmp_path):
     # a pruned narrow read off the wide store stays correct
     row = back.select("S1_1", "S6037_1", "Time").orderBy("Time").first()
     assert row.S1_1 is not None and row.S6037_1 is not None
+
+
+def test_registered_view_carries_channels_added_by_later_batch(spark, tmp_path):
+    """Channel drift between batches: a later batch adds S3_1. Without
+    schema merging, Spark takes the schema from the path-sorted first
+    part file; seeds 2 then 3 put a narrow file there, so the view
+    must still carry the union of every batch's columns."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    staging = str(tmp_path / "staging")
+    out = str(tmp_path / "curated")
+    first = generate_corpus(staging, n_signals=2, seed=2)
+    eeg_csv.ingest(spark, staging, out, run_id="r1")
+    later_dir = str(tmp_path / "later")
+    for p in generate_corpus(later_dir, n_signals=3, seed=3):
+        os.replace(p, os.path.join(staging, "later_" + os.path.basename(p)))
+    later = eeg_csv.ingest(spark, staging, out, run_id="r2")
+    parts = sorted(glob.glob(os.path.join(out, "data", "**", "*.parquet"), recursive=True))
+    assert "S3_1" not in pq.read_schema(parts[0]).names  # the drift case
+
+    view = eeg_csv.register_curated(spark, out, view="eeg_drift")
+    assert "S3_1" in view.columns
+    n = spark.sql("SELECT COUNT(*) AS n, COUNT(S3_1) AS with_s3 FROM eeg_drift").first()
+    assert (n.n, n.with_s3) == (100 * (len(first) + later), 100 * later)

@@ -133,6 +133,20 @@ def test_io_audit_headline_plans():
     assert io_audit.main() == 0
 
 
+def test_io_audit_fails_when_no_scan_parses(tmp_path, monkeypatch):
+    """A plan dump whose scans the FileScan pattern no longer matches
+    (an explain-format change) must fail the audit, not pass it with
+    nothing audited."""
+    import scripts.io_audit as io_audit
+
+    with open(io_audit.PLANS) as fh:
+        drifted = fh.read().replace("FileScan parquet", "FileSourceScan parquet")
+    plans = tmp_path / "PLANS.md"
+    plans.write_text(drifted)
+    monkeypatch.setattr(io_audit, "PLANS", str(plans))
+    assert io_audit.main() == 1
+
+
 def test_bigram_perplexity_single_token_sentinels(spark):
     """The r18 vocabulary rewrite derives V from the count table
     (w1 ∪ non-null w2 + single-token sentinel rows) instead of a
