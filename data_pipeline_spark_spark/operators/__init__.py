@@ -1,13 +1,6 @@
-"""Operator modules. Importing this package registers every named
-query into data_pipeline_spark_spark.registry.
-
-The driver's correctness harness walks queries() in dict order under a
-time budget (~50 keys/round), so the explicit ``_ROUND17_PRIORITY``
-list below decides which keys earn a CORRECTNESS row this round.
-Round 17 retires the remaining r10/r11 staleness debt (r16 verdict
-ask #1): all 49 stale oracle keys, then the one new r17 key, then
-the r11 rows-only reruns. Keys past the budget keep their most
-recent row from earlier rounds.
+"""Operator modules. Importing this package imports every module
+below, and each module registers its named queries into
+data_pipeline_spark_spark.registry as it is imported.
 """
 
 from . import (  # noqa: F401
@@ -34,136 +27,3 @@ from . import (  # noqa: F401
     ingest_ops,
     inventory,
 )
-
-ALL_MODULES = (
-    geo,
-    graph,
-    labels,
-    relational,
-    windows,
-    workloads,
-    scalars,
-    analytics,
-    asof,
-    cdc,
-    corpus,
-    dedup,
-    fuzzy_join,
-    text,
-    training_data,
-    similarity,
-    scale_patterns,
-    maintenance,
-    multimodal,
-    streaming_batch,
-    ingest_ops,
-    inventory,
-)
-
-# Round-17 check order (r16 verdict ask #1: retire the staleness
-# debt for real). The driver walks queries() in dict order under a
-# ~50-key budget (exactly 50 rows each round r8-r16). Order:
-#   (1-49) ALL 49 keys whose latest green row predates r12 — the 4
-#          r10 keys, then the 45 r11 keys with bench-headline
-#          members first (their bench numbers should rest on fresh
-#          rows). multimodal_feature_extract sits early in the r11
-#          block: its r17 norm-parity fix RESTORES the f32 fold the
-#          r11 grade was earned on, and fresh evidence should
-#          confirm that.
-#   (50)   multimodal_phash_near_dup_4band — the ONE new key this
-#          round (verdict ask #6): the resolver's 4-band arm has
-#          never earned a driver row because the sf0.01 fixture sits
-#          below the 1,600-item switch. Placed at 50 rather than
-#          behind the rows-only reruns (a deliberate, documented
-#          deviation from ask #1's literal order): under the
-#          exact-50 budget this is the only order in which BOTH the
-#          full 49-key oracle debt AND ask #6's bands=4 row land,
-#          and the standing convention that a new key lands with
-#          driver evidence in its landing round holds. The rows-only
-#          reruns queue immediately behind — they are the one
-#          evidence class that cannot fail by value (no oracle, the
-#          driver records rows+clean-run only), so if the budget is
-#          a hard 50 they are the least-costly residue to roll to
-#          r18.
-#   (51-55) the 5 r11 rows-only keys (csv probes, eeg ingest).
-# Everything else keeps registration order behind the priority block
-# and retains its latest row (nothing else predates r12 after this
-# grade).
-_ROUND17_PRIORITY = [
-    # (1) latest green row r10
-    "unpivot_long",
-    "window_analytic",
-    "window_rank",
-    "window_twa",
-    # latest green row r11 — headline members first
-    "keyword_search_bm25",
-    "quality_bigram_perplexity",
-    "retrieval_hybrid_rrf",
-    "tokenizer_unigram_segment",
-    "vocab_oov_report",
-    "multimodal_feature_extract",
-    "adhoc_sql",
-    "cohort_retention",
-    "corpus_pack_sequences",
-    "correlated_exists",
-    "doc_truncate_tokens",
-    "drift_psi_report",
-    "event_pattern_match",
-    "event_transitions",
-    "funnel_steps",
-    "layout_zorder_locality",
-    "multimodal_arrow_scan",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "not_in_null_semantics",
-    "privacy_k_anonymity",
-    "profile_table",
-    "scalar_datetime",
-    "scalar_null_safe_eq",
-    "scalar_subquery",
-    "schema_evolution",
-    "sessionization",
-    "setop_except",
-    "setop_intersect_except",
-    "stream_dedup_bounded_state",
-    "stream_drift_psi",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_volume",
-    "tpch_q7_volume_shipping",
-    "tpch_q10_returned_items",
-    "tpch_q12_priority_by_status",
-    "tpch_q14_promo_revenue",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive",
-    "ts_downsample_lttb",
-    "ts_gap_fill",
-    "udf_grouped_zscore",
-    "window_distribution",
-    "window_gaps_islands",
-    "window_range_frame",
-    # (50) the one new r17 key — the resolver's 4-band arm
-    "multimodal_phash_near_dup_4band",
-    # (51-55) r11 rows-only reruns
-    "csv_header_probe",
-    "csv_scan_infer",
-    "csv_scan_schema",
-    "eeg_ingest",
-    "eeg_tidy_melt",
-]
-
-
-def _apply_priority_order() -> None:
-    from .. import registry
-
-    missing = [k for k in _ROUND17_PRIORITY if k not in registry.QUERIES]
-    if missing:  # fail loudly: a typo here silently wastes a round
-        raise KeyError(f"_ROUND17_PRIORITY names unknown keys: {missing}")
-    ordered = {k: registry.QUERIES[k] for k in _ROUND17_PRIORITY}
-    ordered.update(
-        (k, v) for k, v in registry.QUERIES.items() if k not in ordered
-    )
-    registry.QUERIES.clear()
-    registry.QUERIES.update(ordered)
-
-
-_apply_priority_order()

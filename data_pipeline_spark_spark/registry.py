@@ -41,7 +41,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 def load_all() -> None:
     """Import every operator module so registration side effects run."""
-    from .operators import ALL_MODULES  # noqa: F401
+    from . import operators  # noqa: F401
 
 
 def run(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:

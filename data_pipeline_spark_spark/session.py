@@ -1,7 +1,7 @@
 """SparkSession factory.
 
 Centralizes the engine's session configuration so every entry point
-(tests, bench, driver contract) runs with the same Catalyst/AQE
+(tests, perfbench, driver contract) runs with the same Catalyst/AQE
 settings. The reference delegated all of this to EMR defaults
 (reference lambda-functions/lambda-initiator-v2.py:77-176); here the
 session IS the cluster interface, and the config choices are the
@@ -25,7 +25,10 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local core count: ``SPARK_GRAFT_CPUS`` when set, else the CPUs
+    this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def adaptive_shuffle_width(df, per_split: int = 4, floor: int = 8) -> int:
@@ -121,33 +124,6 @@ def get_spark(app_name: str = "data-pipeline-spark-spark") -> SparkSession:
         # full-outer) now carries a scoped SHUFFLE_HASH hint on its
         # bounded CDC-batch side instead (operators/cdc.py).
         .config("spark.sql.shuffle.partitions", str(cpus))
-    )
-    # Initial shuffle width for AQE-planned exchanges (r17 verdict
-    # ask #7; guide §2.2): at 100 TB the INITIAL partition count must
-    # be sized to data volume (e.g. input_bytes / advisorySize ≈
-    # 1.6 M partitions for a 100 TB shuffle at the 64m advisory —
-    # NEVER to driver cores), while AQE's size-based coalescing
-    # (parallelismFirst=false above) shrinks it back to right-sized
-    # partitions at runtime. Parameterised rather than defaulted-on
-    # locally, per the round rule on scale-dependent settings: the
-    # r18 interleaved A/B (docs/AB_r18_initialpartitions.jsonl)
-    # measured the always-on 8×cores form at +2.5% on an 8-key
-    # unchanged basket — pure local task-scheduling cost: every AQE
-    # stage briefly materialises 8× more pre-coalesce reduce tasks,
-    # ~free on a cluster, ~0.06-0.17 s/key against a 0.07 s local
-    # scheduling floor (join_bloom_runtime's bloom-build stage read
-    # +15% with all four arm-pairs separated). Cluster submit sets
-    # SPARK_GRAFT_INITIAL_PARTITIONS to the data-derived value;
-    # unset, AQE's initial width stays the shuffle.partitions
-    # fallback above, exactly the pre-r18 executed plans.
-    init_parts = os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-    if init_parts:
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            init_parts,
-        )
-    builder = (
-        builder
         # --- semantics ------------------------------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         # explain() metadata (ReadSchema/PushedFilters) truncates at

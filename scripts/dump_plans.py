@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Regenerate docs/PLANS.md: the executed physical plan of every
-bench headline query at sf0.1, with the scale-relevant features
+headline query at sf0.1, with the scale-relevant features
 (pushdown, pruning, join strategy, shuffle count) summarized per
-query. Run after changing any operator:
+query. HEADLINE below is the plan book's key list, in book order;
+scripts/io_audit.py audits the result. Run after changing any
+operator:
 
     python scripts/dump_plans.py
 """
@@ -15,9 +17,89 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE  # noqa: E402
 from data_pipeline_spark_spark import registry  # noqa: E402
 from data_pipeline_spark_spark.session import get_spark  # noqa: E402
+
+HEADLINE = [
+    "filter_pred",
+    "agg_basic",
+    "agg_distinct",
+    "agg_grouping_sets",
+    "join_inner_equi",
+    "join_broadcast",
+    "join_outer",
+    "join_range_asof",
+    "window_rank",
+    "window_analytic",
+    "sort_limit",
+    "scalar_json",
+    "stream_window_agg",
+    "dedup_exact",
+    "dedup_ngram_jaccard",
+    "dedup_span_exact",
+    "dedup_semantic",
+    "dedup_containment",
+    "quality_unigram_logprob",
+    "keyword_search_bm25",
+    "vocab_oov_report",
+    "sim_search",
+    "sim_search_pq",
+    "sim_search_ivfpq",
+    "sim_search_ivfpq_trained",
+    "retrieval_hybrid_rrf",
+    "corpus_duplication_profile",
+    "corpus_duplication_profile_hashed",
+    "text_stats",
+    "repetition_stats",
+    "ts_resample_ohlc",
+    "agg_hll_mergeable",
+    "udf_surface",
+    "merge_upsert",
+    "join_fuzzy_string",
+    "join_bloom_runtime",
+    "window_twa",
+    "basket_pair_affinity",
+    "basket_pair_affinity_apriori",
+    "tidy_supercat_hourly",
+    "mv_incremental_refresh",
+    "tpch_q1_pricing_summary",
+    "tpch_q3_shipping_priority",
+    "tpch_q5_local_volume",
+    "tpch_q10_returned_items",
+    "tpch_q18_large_orders",
+    "tpch_q21_suppliers_who_kept_waiting",
+    "agg_weighted_median",
+    "doc_fingerprint_winnow",
+    "tokenizer_unigram_segment",
+    "quality_bigram_perplexity",
+    "corpus_pack_apply",
+    "tpch_q9_product_type_profit",
+    "retrieval_prf_expand",
+    "ts_cusum_changepoint",
+    "agg_countmin_sketch",
+    "skyline_pareto",
+    "agg_ddsketch_quantile",
+    "abtest_welch_ttest",
+    "dedup_bloom_incremental",
+    "privacy_dp_count",
+    "privacy_dp_sum",
+    "corpus_filter_gopher",
+    "agg_skew_kurtosis",
+    "ts_acf",
+    "abtest_ratio_delta",
+    "agg_anova_oneway",
+    "ts_seasonal_strength",
+    "cohort_rfm_segments",
+    "agg_chi_square_indep",
+    "abtest_cuped",
+    "agg_entropy_profile",
+    "cohort_survival_km",
+    "label_fleiss_kappa",
+    "label_cohens_kappa",
+    "text_readability",
+    "geo_cell_stats",
+    "abtest_two_proportion_z",
+]
 
 
 def main() -> None:

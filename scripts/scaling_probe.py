@@ -225,11 +225,10 @@ def main() -> None:
     if "--sf1" in args:
         keys = [a for a in args if a != "--sf1" and a != "--full"]
         if "--full" in args and not keys:
-            # the FULL bench headline (r12 VERDICT ask 2): every
-            # graded headline key gets its two decade slopes
-            import bench
+            # every plan-book headline key gets its two decade slopes
+            from scripts.dump_plans import HEADLINE
 
-            keys = list(bench.HEADLINE)
+            keys = list(HEADLINE)
         sf1_main(keys or None)
         return
     probes = args or DEFAULT_PROBES

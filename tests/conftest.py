@@ -15,7 +15,6 @@ SF_ORACLE = "/root/testdata/sf0.01"  # driver's correctness SF
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # lean for tests
     spark = get_spark("dps-tests")
     yield spark
 

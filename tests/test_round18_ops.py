@@ -133,6 +133,22 @@ def test_io_audit_headline_plans():
     assert io_audit.main() == 0
 
 
+def test_plan_book_matches_its_generator():
+    """docs/PLANS.md holds one `## key` section per entry of
+    scripts/dump_plans.py::HEADLINE, in that order, and every key is
+    registered — so the audited dump and the list that regenerates
+    it cannot drift apart. No Spark needed."""
+    import scripts.dump_plans as dump_plans
+    import scripts.io_audit as io_audit
+    from data_pipeline_spark_spark import registry
+
+    registry.load_all()
+    with open(io_audit.PLANS) as fh:
+        headings = [ln[3:].strip() for ln in fh if ln.startswith("## ")]
+    assert headings == dump_plans.HEADLINE
+    assert [k for k in dump_plans.HEADLINE if k not in registry.QUERIES] == []
+
+
 def test_io_audit_fails_when_no_scan_parses(tmp_path, monkeypatch):
     """A plan dump whose scans the FileScan pattern no longer matches
     (an explain-format change) must fail the audit, not pass it with
