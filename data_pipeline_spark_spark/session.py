@@ -31,6 +31,17 @@ def default_parallelism() -> int:
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
+def default_driver_memory() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else half of
+    the host's MemTotal, floored at 1 GiB."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1024, kib // 2048)}m"
+
+
 def adaptive_shuffle_width(df, per_split: int = 4, floor: int = 8) -> int:
     """Explicit-repartition width that tracks data volume instead of
     hardcoding cluster parallelism. Some stages need a PINNED width
@@ -138,7 +149,7 @@ def get_spark(app_name: str = "data-pipeline-spark-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- local-mode hygiene ----------------------------------------------
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -17,24 +17,31 @@ sparkle-v5.py:49-102) with its four bugs fixed (SURVEY.md §4):
 4. the 8 metadata/header rows are skipped on the full read (v9 left
    them in as null-ish rows, sparkle-v9.py:105).
 
-Pipeline per file:
-    probe (≤8 rows, driver-side)  → metadata dict + header
-    schema build (all-double, v9) → full schema-explicit CSV scan
-    prelude skip                  → ×1e5 timestamp decode
-    Year/Month/Day derivation     → partitioned append write
-    ledger update + schema-registry JSON export
+Pipeline per header group (files whose header rows are identical):
+    probe each file (≤8 rows, driver-side) → metadata + header; group
+    schema build (all-double, v9)  → ONE schema-explicit CSV scan
+    ``curate``: prelude skip, per-file metadata by file-name lookup,
+                ×1e5 timestamp decode, Year/Month/Day derivation
+    ONE partitioned write job      → staged, then committed (intent,
+                                     rename into data/, ledger)
+    schema-registry JSON export + ingest log, once per run
 
-Scale: the per-file probe reads 8 rows; the full scan is a single
-schema-explicit distributed CSV read; the write is shuffle-free
-(partitionBy fan-out at the task level). Many files ingest in one
-run; each file's scan parallelizes across its blocks.
+``curate`` is the only curated transform: the streaming path
+(streaming/ingest.py) applies it to its file stream.
+
+Scale: the probe reads 8 rows per file; each group is one distributed
+scan whose splits never span files, and one shuffle-free write
+(partitionBy fan-out at the task level), so a monthly batch of N
+same-header files costs one job, not N.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +59,8 @@ META_KEYS = (
     "TestDate",
     "TestTime",
 )
+# curated metadata columns, in store order
+META_COLUMNS = ("PatientName", "PatientID", "PatientBirthDate", "TestDate", "TestTime")
 
 
 @dataclass
@@ -120,7 +129,7 @@ def build_schema(columns: list[str]) -> T.StructType:
 
 
 # ---------------------------------------------------------------------------
-# per-file curated read
+# the curated transform (batch and streaming)
 # ---------------------------------------------------------------------------
 
 
@@ -150,34 +159,68 @@ def _parse_ref_date(value: str | None):
     return F.try_to_date(F.lit(value), "y/M/d")
 
 
-def read_session(spark: SparkSession, path: str, header: SessionHeader | None = None) -> DataFrame:
-    """One session file → curated DataFrame (raw signals + typed
-    patient metadata + decoded Timestamp + Year/Month/Day)."""
-    if header is None:
-        header = probe_header(spark, path)
-    schema = build_schema(header.columns)
-    df = spark.read.schema(schema).option("header", "false").csv(path)
+def _source_file_name():
+    """Raw base name of the file each row was read from.
+    ``_metadata.file_name`` is percent-encoded (``patient one.csv``
+    reads as ``patient%20one.csv``); url_decode undoes that, but it
+    also decodes a literal '+' to a space, so '+' is escaped first."""
+    name = F.col("_metadata.file_name")
+    return F.url_decode(F.replace(name, F.lit("+"), F.lit("%2B")))
+
+
+def curate(raw: DataFrame, headers: dict[str, SessionHeader]) -> DataFrame:
+    """The curated transform, shared by batch and streaming ingest:
+    a raw schema-explicit CSV frame (batch or streaming, any number of
+    files) → raw signals + typed patient metadata + decoded Timestamp
+    + Year/Month/Day.
+
+    ``headers`` maps each file's base name to its probed header. Each
+    row's patient metadata is a lookup in a literal map keyed on its
+    source file name; both file sources expose ``_metadata``, so no
+    join is needed."""
+    meta = F.create_map(
+        *(
+            x
+            for name, h in headers.items()
+            for x in (F.lit(name), _metadata_struct(h.metadata))
+        )
+    )[_source_file_name()]
+    # The load-bearing ×1e5 decode (see decode_clock for the
+    # truncation bug this avoids).
+    ts = decode_clock(F.col("ClockDateTime"))
     # Prelude skip: the 8 prelude rows parse as all-null ClockDateTime
     # under the double schema (string keys don't cast); data rows always
     # carry a ClockDateTime. Declarative, distributed, no zipWithIndex.
-    df = df.filter(F.col("ClockDateTime").isNotNull())
+    return raw.filter(F.col("ClockDateTime").isNotNull()).select(
+        "*",
+        *(meta[f].alias(f) for f in META_COLUMNS),
+        ts.alias("Timestamp"),
+        F.year(ts).alias("Year"),
+        F.month(ts).alias("Month"),
+        F.dayofmonth(ts).alias("Day"),
+    )
 
-    meta = header.metadata
-    df = (
-        df.withColumn("PatientName", F.lit(meta.get("PatientName", "")).cast("string"))
-        .withColumn("PatientID", F.lit(meta.get("PatientID", "")).cast("string"))
-        .withColumn("PatientBirthDate", _parse_ref_date(meta.get("PatientBirthDate")))
-        .withColumn("TestDate", _parse_ref_date(meta.get("TestDate")))
-        .withColumn("TestTime", F.lit(meta.get("TestTime", "")).cast("string"))
+
+def _metadata_struct(meta: dict[str, str]):
+    return F.struct(
+        F.lit(meta.get("PatientName", "")).alias("PatientName"),
+        F.lit(meta.get("PatientID", "")).alias("PatientID"),
+        _parse_ref_date(meta.get("PatientBirthDate")).alias("PatientBirthDate"),
+        _parse_ref_date(meta.get("TestDate")).alias("TestDate"),
+        F.lit(meta.get("TestTime", "")).alias("TestTime"),
     )
-    # The load-bearing ×1e5 decode (see decode_clock for the
-    # truncation bug this avoids).
-    df = df.withColumn("Timestamp", decode_clock(F.col("ClockDateTime")))
-    return (
-        df.withColumn("Year", F.year("Timestamp"))
-        .withColumn("Month", F.month("Timestamp"))
-        .withColumn("Day", F.dayofmonth("Timestamp"))
-    )
+
+
+def scan_csv(spark: SparkSession, paths: list[str], columns: list[str]) -> DataFrame:
+    """One schema-explicit scan over session files sharing a header."""
+    return spark.read.schema(build_schema(columns)).option("header", "false").csv(paths)
+
+
+def read_session(spark: SparkSession, path: str, header: SessionHeader | None = None) -> DataFrame:
+    """One session file → curated DataFrame (``curate`` over one file)."""
+    if header is None:
+        header = probe_header(spark, path)
+    return curate(scan_csv(spark, [path], header.columns), {os.path.basename(path): header})
 
 
 # ---------------------------------------------------------------------------
@@ -198,17 +241,18 @@ def _read_ledger(output_dir: str) -> set[str]:
 
 
 def _write_ledger(output_dir: str, processed: set[str]) -> None:
-    """Atomic replace: writing in place with mode 'w' truncates
-    first, so a crash mid-dump would leave an empty/partial JSON that
-    _read_ledger treats as 'nothing processed' — the next run would
-    re-append EVERY file, not just the one in flight (r8 review).
-    Temp-file + os.replace keeps the crash window at the documented
-    single in-flight file."""
-    os.makedirs(output_dir, exist_ok=True)
-    target = _ledger_path(output_dir)
+    _write_json(_ledger_path(output_dir), sorted(processed))
+
+
+def _write_json(target: str, payload) -> None:
+    """Atomic replace: writing in place with mode 'w' truncates first,
+    so a crash mid-dump would leave an empty/partial JSON — for the
+    ledger, one that _read_ledger treats as 'nothing processed', and
+    the next run would re-append EVERY file (r8 review)."""
+    os.makedirs(os.path.dirname(target), exist_ok=True)
     tmp = target + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(sorted(processed), f, indent=1)
+        json.dump(payload, f, indent=1)
     os.replace(tmp, target)
 
 
@@ -251,40 +295,98 @@ def ingest(
     over the same staging dir is a no-op (empty-input guard — the v5
     fix, reference sparkle-v5.py:43-46).
 
-    Crash-safety contract: each file is appended and THEN ledgered,
-    one file at a time, bounding the damage to the single in-flight
-    file. A crash mid-write is clean (job-uncommitted output lives
-    only in ignored _temporary paths), but a crash in the window
-    AFTER the append job commits and BEFORE the ledger write lands
-    leaves that one file's rows committed, and the re-run appends
-    them again — at-least-once, one-file duplicate window, by design.
-    Strict exactly-once across arbitrary crash points goes through the
-    streaming checkpoint path (streaming/ingest.py), where the
-    checkpoint commits file progress transactionally."""
-    files = list_input_files(input_dir)
+    Batched: each file's prelude is probed once, files are grouped by
+    header signature (the column tuple), and each group is one scan
+    and one partitioned write job, not one per file.
+
+    Crash-safety contract (exactly-once): a group's write lands in
+    ``_pending/<txn>`` and is committed in three steps — (1) an
+    atomically written intent file names the group's CSVs, (2) the
+    part files are renamed into ``data/``, (3) the ledger is written,
+    then the intent and the staging dir are removed. Every call first
+    recovers unfinished transactions: one with an intent file is rolled
+    forward (renames are idempotent, the ledger update is a set
+    union), one without is discarded and its CSVs, not in the ledger,
+    are ingested again. One ingest per output_dir at a time: recovery
+    treats every staging dir it finds as abandoned."""
     processed = _read_ledger(output_dir)
-    todo = [f for f in files if os.path.basename(f) not in processed]
-    if not todo:
+    done = _recover(output_dir, processed)
+    todo = [f for f in list_input_files(input_dir) if os.path.basename(f) not in processed]
+    if not todo and not done:
         return 0
 
-    data_dir = os.path.join(output_dir, "data")
+    headers = {os.path.basename(f): probe_header(spark, f) for f in todo}
+    groups: dict[tuple[str, ...], list[str]] = {}
+    for f in todo:
+        groups.setdefault(tuple(headers[os.path.basename(f)].columns), []).append(f)
     schema_df: DataFrame | None = None
-    done: list[str] = []
-    for path in todo:
-        df = read_session(spark, path)
-        df.write.partitionBy("Year", "Month", "Day").mode("append").parquet(data_dir)
-        processed.add(os.path.basename(path))
-        _write_ledger(output_dir, processed)
-        done.append(os.path.basename(path))
+    for columns, paths in groups.items():
+        names = [os.path.basename(f) for f in paths]
+        df = curate(scan_csv(spark, paths, list(columns)), {n: headers[n] for n in names})
+        txn = uuid.uuid4().hex
+        df.write.partitionBy("Year", "Month", "Day").parquet(
+            os.path.join(_pending_dir(output_dir), txn)
+        )
+        _write_json(_intent_path(output_dir, txn), names)
+        _roll_forward(output_dir, txn, names, processed)
+        done += names
         empty = df.limit(0)
         schema_df = (
             empty
             if schema_df is None
             else schema_df.unionByName(empty, allowMissingColumns=True)
         )
-    export_schema_registry(schema_df, output_dir, run_id=run_id)
+    if schema_df is not None:
+        os.rmdir(_pending_dir(output_dir))  # every staging dir committed
+        export_schema_registry(schema_df, output_dir, run_id=run_id)
     append_ingest_log(output_dir, run_id or "batch", done)
-    return len(todo)
+    return len(done)
+
+
+def _pending_dir(output_dir: str) -> str:
+    # underscore-prefixed: Hadoop's hidden-file filter keeps readers of
+    # output_dir out of uncommitted writes
+    return os.path.join(output_dir, "_pending")
+
+
+def _intent_path(output_dir: str, txn: str) -> str:
+    return os.path.join(_pending_dir(output_dir), f"{txn}.intent.json")
+
+
+def _roll_forward(output_dir: str, txn: str, names: list[str], processed: set[str]) -> None:
+    """Steps 2 and 3 of the commit; safe to repeat after a crash at
+    any point inside them."""
+    stage = os.path.join(_pending_dir(output_dir), txn)
+    data_dir = os.path.join(output_dir, "data")
+    for root, _, files in os.walk(stage):
+        rel = os.path.relpath(root, stage)
+        if rel == os.curdir:
+            continue  # the job's _SUCCESS marker, not data
+        os.makedirs(os.path.join(data_dir, rel), exist_ok=True)
+        for f in files:
+            # part names carry the write job's UUID: never a clash
+            os.replace(os.path.join(root, f), os.path.join(data_dir, rel, f))
+    processed.update(names)
+    _write_ledger(output_dir, processed)
+    os.remove(_intent_path(output_dir, txn))
+    shutil.rmtree(stage)
+
+
+def _recover(output_dir: str, processed: set[str]) -> list[str]:
+    """Finish every committed transaction left by a crashed run and
+    discard the uncommitted ones; returns the CSV names committed."""
+    pending = _pending_dir(output_dir)
+    if not os.path.isdir(pending):
+        return []
+    done: list[str] = []
+    for entry in sorted(os.listdir(pending)):
+        if entry.endswith(".intent.json"):
+            with open(os.path.join(pending, entry)) as f:
+                names = json.load(f)
+            _roll_forward(output_dir, entry[: -len(".intent.json")], names, processed)
+            done += names
+    shutil.rmtree(pending)  # staging dirs without an intent, temp files
+    return done
 
 
 def append_ingest_log(output_dir: str, run_id: str, files: list[str]) -> str:

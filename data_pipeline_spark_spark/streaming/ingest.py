@@ -24,36 +24,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import pin_utc
-from ..sources.eeg_csv import (
-    SessionHeader,
-    build_schema,
-    decode_clock,
-    probe_header,
-)
+from ..sources.eeg_csv import build_schema, curate, probe_header
 
 
 def stream_ingest_eeg(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
-    header: SessionHeader | None = None,
     settle_s: float = 2.0,
 ) -> int:
     """availableNow streaming ingest of an EEG staging directory.
     Returns the number of rows written by THIS run (0 on a no-op
     re-run — the checkpoint already tracks every file).
 
-    The curated transform is shared with the batch path (same prelude
-    skip, ×1e5 decode, Y/M/D), INCLUDING per-file patient metadata:
-    each staged file's 8-row prelude is probed driver-side (bounded,
-    same probe the batch path runs) into a tiny (file → metadata)
-    lookup that is broadcast stream-static-joined on
-    input_file_name(), so the streaming curated schema is identical
-    to the batch one.
+    The curated transform is the batch path's ``curate``, INCLUDING
+    per-file patient metadata: each staged file's 8-row prelude is
+    probed driver-side (bounded, same probe the batch path runs), and
+    ``curate`` looks each row's metadata up by its source file name,
+    so the streaming curated schema is identical to the batch one.
 
-    Note: the streaming file source requires a uniform schema across
-    the directory — enforced here by probing one file. Mixed-schema
-    staging dirs go through the batch path instead.
+    The streaming file source reads every file under one schema, so
+    every file in the directory must carry the same header row; a
+    mixed-header directory raises ValueError naming the odd files
+    (batch ``eeg_csv.ingest`` groups files by header instead). Files
+    already ingested by an earlier run count: the check covers the
+    whole directory the source lists.
     """
     # Settle guard (r17 advisor fix): the staging hardlinks share the
     # source inode, so a CSV still being APPENDED after the listdir
@@ -91,27 +86,11 @@ def stream_ingest_eeg(
             first_stat[f] = (st.st_size, st.st_mtime)
     if not files:
         return 0
-    if header is None:
-        header = probe_header(spark, os.path.join(input_dir, files[0]))
-    schema = build_schema(header.columns)
 
     # Per-file metadata lookup. Probing is O(files) driver-side reads
     # of ≤8 rows each — the same cost the batch path already pays; at
     # cluster scale this is a metadata pass, not a data pass.
-    meta_rows = []
-    for f in files:
-        h = probe_header(spark, os.path.join(input_dir, f))
-        m = h.metadata
-        meta_rows.append(
-            (
-                f,
-                m.get("PatientName", ""),
-                m.get("PatientID", ""),
-                m.get("PatientBirthDate") or None,
-                m.get("TestDate") or None,
-                m.get("TestTime", ""),
-            )
-        )
+    headers = {f: probe_header(spark, os.path.join(input_dir, f)) for f in files}
     # Second observation: drop any file whose (size, mtime) moved
     # while the probes above ran — an active writer observed across
     # a real I/O interval, not a point-in-time mtime guess. Only
@@ -125,28 +104,18 @@ def stream_ingest_eeg(
                 continue  # vanished mid-probe: defer, not ingest
             if (st.st_size, st.st_mtime) == first_stat[f]:
                 settled.append(f)
-        if len(settled) != len(files):
-            kept = set(settled)
-            meta_rows = [r for r in meta_rows if r[0] in kept]
-            files = settled
+        files = settled
         if not files:
             return 0
-
-    meta_df = spark.createDataFrame(
-        meta_rows,
-        "_file string, PatientName string, PatientID string, "
-        "_birth string, _testdate string, TestTime string",
-    ).select(
-        "_file",
-        "PatientName",
-        "PatientID",
-        # try_to_date: under Spark 4's default ANSI mode, to_date
-        # RAISES on malformed metadata — one bad file would abort the
-        # whole streaming run instead of landing a null date
-        F.try_to_date("_birth", "y/M/d").alias("PatientBirthDate"),
-        F.try_to_date("_testdate", "y/M/d").alias("TestDate"),
-        "TestTime",
-    )
+    columns = headers[files[0]].columns
+    odd = [f for f in files if headers[f].columns != columns]
+    if odd:
+        raise ValueError(
+            f"mixed headers in {input_dir}: {odd} differ from {files[0]}'s "
+            f"{len(columns)} columns; the streaming file source reads one "
+            "schema per directory, so ingest these with the batch "
+            "eeg_csv.ingest, which groups files by header"
+        )
 
     checkpoint = os.path.join(output_dir, "_checkpoint")
     data_dir = os.path.join(output_dir, "data")
@@ -157,7 +126,7 @@ def stream_ingest_eeg(
     # input_dir itself (r16 self-review): the source does its own
     # listing, so a CSV landing between the os.listdir snapshot and
     # the source's list would otherwise be ingested with NULL
-    # metadata (it is absent from the broadcast lookup) and
+    # metadata (it is absent from the metadata lookup) and
     # checkpoint-marked processed forever. Staged names are the
     # original names, so the checkpoint's no-op re-run contract
     # holds; files that land later are staged — with their metadata
@@ -174,26 +143,13 @@ def stream_ingest_eeg(
 
                 shutil.copy2(os.path.join(input_dir, f), dst)
 
-    stream = (
-        spark.readStream.schema(schema)
+    raw = (
+        spark.readStream.schema(build_schema(columns))
         .option("header", "false")
         .option("pathGlobFilter", "*.csv")
         .csv(staged_dir)
-        .filter(F.col("ClockDateTime").isNotNull())
-        # input_file_name() is a URI (percent-encoded), but meta_df keys
-        # on raw os.listdir names — url_decode so "my file.csv" matches
-        # instead of silently joining to null metadata.
-        .withColumn(
-            "_file",
-            F.url_decode(F.element_at(F.split(F.input_file_name(), "/"), -1)),
-        )
-        .join(F.broadcast(meta_df), "_file", "left")
-        .drop("_file")
-        .withColumn("Timestamp", decode_clock(F.col("ClockDateTime")))
-        .withColumn("Year", F.year("Timestamp"))
-        .withColumn("Month", F.month("Timestamp"))
-        .withColumn("Day", F.dayofmonth("Timestamp"))
     )
+    stream = curate(raw, headers)
     query = (
         stream.writeStream.format("parquet")
         .option("path", data_dir)

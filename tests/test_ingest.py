@@ -23,6 +23,8 @@ from data_pipeline_spark_spark.sources.schema_rules import (
     type_for_column,
 )
 
+from .test_catalog import _jobs
+
 
 @pytest.fixture(scope="module")
 def corpus(tmp_path_factory):
@@ -233,3 +235,95 @@ def test_registered_view_carries_channels_added_by_later_batch(spark, tmp_path):
     assert "S3_1" in view.columns
     n = spark.sql("SELECT COUNT(*) AS n, COUNT(S3_1) AS with_s3 FROM eeg_drift").first()
     assert (n.n, n.with_s3) == (100 * (len(first) + later), 100 * later)
+
+
+def test_same_header_files_ingest_in_one_job(spark, tmp_path):
+    src = str(tmp_path / "staging")
+    out = str(tmp_path / "curated")
+    paths = generate_corpus(src, n_patients=4, max_sessions=1, rows_per_session=20,
+                            n_signals=3, seed=5)
+    assert len(paths) == 4
+    assert _jobs(spark, lambda: eeg_csv.ingest(spark, src, out)) == 1
+    assert spark.read.parquet(os.path.join(out, "data")).count() == 4 * 20
+
+
+def test_mixed_header_dir_ingests_one_job_per_signature(spark, tmp_path):
+    src = str(tmp_path / "staging")
+    out = str(tmp_path / "curated")
+    narrow = generate_corpus(src, n_patients=2, max_sessions=1, rows_per_session=20,
+                             n_signals=2, seed=2)
+    wide = generate_corpus(src, n_patients=2, max_sessions=1, rows_per_session=20,
+                           n_signals=3, seed=3, patient_offset=10)
+    n = []
+    assert _jobs(spark, lambda: n.append(eeg_csv.ingest(spark, src, out))) == 2
+    assert n == [len(narrow) + len(wide)]
+    eeg_csv.register_curated(spark, out, view="eeg_mixed")
+    got = spark.sql(
+        "SELECT COUNT(*) AS n, COUNT(S3_1) AS with_s3, COUNT(PatientID) AS with_meta "
+        "FROM eeg_mixed"
+    ).first()
+    assert (got.n, got.with_s3, got.with_meta) == (80, 40, 80)
+
+
+def _crash_after_write(monkeypatch):
+    real = os.replace
+
+    def replace(src, dst):
+        if dst.endswith(".intent.json"):
+            raise OSError("crash before the intent file")
+        real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+
+
+def _crash_mid_rename(monkeypatch):
+    real = os.replace
+    renamed = []
+
+    def replace(src, dst):
+        if f"{os.sep}data{os.sep}" in dst:
+            if len(renamed) == 2:
+                raise OSError("crash midway through the renames")
+            renamed.append(dst)
+        real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+
+
+def _crash_after_ledger(monkeypatch):
+    real = eeg_csv._write_ledger
+
+    def write_ledger(output_dir, processed):
+        real(output_dir, processed)
+        raise OSError("crash before cleanup")
+
+    monkeypatch.setattr(eeg_csv, "_write_ledger", write_ledger)
+
+
+@pytest.mark.parametrize(
+    "crash", [_crash_after_write, _crash_mid_rename, _crash_after_ledger],
+    ids=["after_write", "mid_rename", "after_ledger"],
+)
+def test_crashed_ingest_recovers_exactly_once(spark, tmp_path, monkeypatch, crash):
+    """A crash at any point of the staged commit, then a clean run:
+    every CSV's rows are in the store exactly once, and the ledger
+    names every CSV."""
+    src = str(tmp_path / "staging")
+    out = str(tmp_path / "curated")
+    paths = generate_corpus(src, n_patients=3, max_sessions=1, rows_per_session=20,
+                            n_signals=3, seed=9)
+    with monkeypatch.context() as m:
+        crash(m)
+        with pytest.raises(OSError, match="crash"):
+            eeg_csv.ingest(spark, src, out, run_id="crashed")
+    pending = os.listdir(os.path.join(out, "_pending"))
+    assert any(p.endswith(".intent.json") for p in pending) == (crash is not _crash_after_write)
+
+    assert eeg_csv.ingest(spark, src, out, run_id="recovery") == len(paths)
+    assert eeg_csv.ingest(spark, src, out, run_id="rerun") == 0
+    store = spark.read.parquet(os.path.join(out, "data"))
+    assert store.count() == 20 * len(paths)
+    assert store.select("PatientID", "Time").distinct().count() == 20 * len(paths)
+    assert eeg_csv._read_ledger(out) == {os.path.basename(p) for p in paths}
+    assert not os.path.exists(os.path.join(out, "_pending"))
+    assert len(open(os.path.join(out, "ingest-log.csv")).read().splitlines()) == len(paths)
