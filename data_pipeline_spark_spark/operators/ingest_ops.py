@@ -216,8 +216,8 @@ def eeg_distinct_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # input_file_name() is percent-encoded; decode so a staged
         # 'my session.csv' reports under its real name — the same
-        # fix streaming/ingest.py documents for this primitive (r16
-        # self-review)
+        # fix eeg_csv._source_file_name documents for this primitive
+        # (r16 self-review)
         .select(
             F.url_decode(
                 F.element_at(F.split("path", "/"), -1)

@@ -23,22 +23,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, materialize
 from ..registry import query
 from ..sources import eeg_csv
 from ..sources.schema_rules import type_for_column
 from .ingest_ops import fixture_dir
-
-
-def _materialize(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Shim over the ONE shared [[catalog.materialize]] (r16
-    self-review: this was a third private copy — the exact
-    duplication catalog.py records as having drifted once already
-    in r8; the unused ``spark`` arg is kept for the existing
-    call-site shape)."""
-    from ..catalog import materialize
-
-    return materialize(df)
 
 
 # ---------------------------------------------------------------------------
@@ -274,7 +263,7 @@ def parquet_write_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = back.groupBy(F.col("o_year").cast("int").alias("o_year")).agg(
             F.count("*").alias("n_rows")
         )
-        return _materialize(spark, result)
+        return materialize(result)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -409,7 +398,7 @@ def catalog_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM eeg_catalog_sync GROUP BY PatientID ORDER BY PatientID
             """
         )
-        return _materialize(spark, result)
+        return materialize(result)
     finally:
         spark.catalog.dropTempView("eeg_catalog_sync")
         shutil.rmtree(out, ignore_errors=True)
@@ -418,46 +407,34 @@ def catalog_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("event_trigger")
 def event_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-triggered incremental ingest (reference .OK-sentinel →
-    Lambda → EMR, lambda-initiator-v2.py:27-39) re-expressed as a
-    Structured Streaming file source with trigger(availableNow=True):
-    the checkpoint IS the ledger. Streaming and batch paths must agree
-    on the curated row count AND on per-file patient metadata (the
-    n_patients column would be 0/None on a metadata-less path)."""
-    from ..streaming.ingest import stream_ingest_eeg
-
-    src = fixture_dir()
-    stream_out = tempfile.mkdtemp(prefix="dps_evt_stream_")
-    batch_out = tempfile.mkdtemp(prefix="dps_evt_batch_")
+    Lambda → EMR run over the staging folder,
+    lambda-initiator-v2.py:27-39) re-expressed as one ``ingest`` per
+    trigger over a staging dir; the ledger makes each trigger ingest
+    only what landed since the last. Three triggers: the corpus minus
+    one file lands, then the last file, then nothing (a no-op). Per
+    trigger: files ingested, and the store's rows and patients after
+    it (a re-ingest would grow the rows; a metadata-less store would
+    count 0 patients)."""
+    paths = eeg_csv.list_input_files(fixture_dir())
+    staging = tempfile.mkdtemp(prefix="dps_evt_staging_")
+    out = tempfile.mkdtemp(prefix="dps_evt_out_")
     try:
-        # settle_s=0: the fixture corpus is fully written before
-        # this call (single thread, no concurrent producer)
-        stream_rows = stream_ingest_eeg(spark, src, stream_out, settle_s=0.0)
-        stream_patients = (
-            spark.read.parquet(os.path.join(stream_out, "data"))
-            .filter(F.col("PatientID") != "")
-            .select("PatientID")
-            .distinct()
-            .count()
-        )
-        eeg_csv.ingest(spark, src, batch_out, run_id="evt-batch")
-        batch_df = spark.read.parquet(os.path.join(batch_out, "data"))
-        batch_rows = batch_df.count()
-        batch_patients = (
-            batch_df.filter(F.col("PatientID") != "")
-            .select("PatientID")
-            .distinct()
-            .count()
-        )
+        rows = []
+        for trigger, landing in enumerate((paths[:-1], paths[-1:], []), start=1):
+            for p in landing:
+                shutil.copy(p, staging)
+            files = eeg_csv.ingest(spark, staging, out, run_id=f"trigger-{trigger}")
+            store = spark.read.parquet(os.path.join(out, "data")).agg(
+                F.count("*"),
+                F.countDistinct(F.when(F.col("PatientID") != "", F.col("PatientID"))),
+            )
+            rows.append((trigger, files, *store.first()))
         return spark.createDataFrame(
-            [
-                ("stream_availableNow", stream_rows, stream_patients),
-                ("batch", batch_rows, batch_patients),
-            ],
-            "path string, curated_rows long, n_patients long",
+            rows, "trigger int, files long, curated_rows long, n_patients long"
         )
     finally:
-        shutil.rmtree(stream_out, ignore_errors=True)
-        shutil.rmtree(batch_out, ignore_errors=True)
+        shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(out, ignore_errors=True)
 
 
 @query("ingest_log")
@@ -475,7 +452,7 @@ def ingest_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("run_id", "file")
             .orderBy("file")
         )
-        return _materialize(spark, log)
+        return materialize(log)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -563,7 +540,7 @@ def catalog_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = spark.sql(
             f"SELECT o_year, COUNT(*) AS n_rows FROM {tbl} GROUP BY o_year"
         )
-        return _materialize(spark, result)
+        return materialize(result)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         shutil.rmtree(loc, ignore_errors=True)

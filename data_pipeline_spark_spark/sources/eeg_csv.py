@@ -17,8 +17,11 @@ sparkle-v5.py:49-102) with its four bugs fixed (SURVEY.md §4):
 4. the 8 metadata/header rows are skipped on the full read (v9 left
    them in as null-ish rows, sparkle-v9.py:105).
 
-Pipeline per header group (files whose header rows are identical):
-    probe each file (≤8 rows, driver-side) → metadata + header; group
+Pipeline per run, then per header group (files whose header rows are
+identical):
+    settle guard: defer files that may still be being written
+    probe each file (≤8 rows, driver-side) → metadata + header; every
+    header checked before the first write
     schema build (all-double, v9)  → ONE schema-explicit CSV scan
     ``curate``: prelude skip, per-file metadata by file-name lookup,
                 ×1e5 timestamp decode, Year/Month/Day derivation
@@ -26,8 +29,8 @@ Pipeline per header group (files whose header rows are identical):
                                      rename into data/, ledger)
     schema-registry JSON export + ingest log, once per run
 
-``curate`` is the only curated transform: the streaming path
-(streaming/ingest.py) applies it to its file stream.
+``ingest`` is the only writer of a curated store, and ``curate`` the
+only curated transform.
 
 Scale: the probe reads 8 rows per file; each group is one distributed
 scan whose splits never span files, and one shuffle-free write
@@ -82,9 +85,8 @@ def probe_header(spark: SparkSession, path: str) -> SessionHeader:
 
     Local files take a plain ``open()`` fast path: the prelude is 8
     short lines, and launching a Spark job per probe turns a staging
-    dir of N files into N scheduler round-trips (~50-100 ms each —
-    the streaming path probes EVERY staged file each trigger, r8
-    review). Non-local URIs (s3://, hdfs://) keep the bounded
+    dir of N files into N scheduler round-trips (~50-100 ms each,
+    r8 review). Non-local URIs (s3://, hdfs://) keep the bounded
     spark.read.text probe."""
     if os.path.exists(path):
         lines = []
@@ -129,7 +131,7 @@ def build_schema(columns: list[str]) -> T.StructType:
 
 
 # ---------------------------------------------------------------------------
-# the curated transform (batch and streaming)
+# the curated transform
 # ---------------------------------------------------------------------------
 
 
@@ -169,14 +171,14 @@ def _source_file_name():
 
 
 def curate(raw: DataFrame, headers: dict[str, SessionHeader]) -> DataFrame:
-    """The curated transform, shared by batch and streaming ingest:
-    a raw schema-explicit CSV frame (batch or streaming, any number of
-    files) → raw signals + typed patient metadata + decoded Timestamp
-    + Year/Month/Day.
+    """The curated transform, used by ``ingest`` and ``read_session``:
+    a raw schema-explicit CSV frame (any number of files) → raw
+    signals + typed patient metadata + decoded Timestamp +
+    Year/Month/Day.
 
     ``headers`` maps each file's base name to its probed header. Each
     row's patient metadata is a lookup in a literal map keyed on its
-    source file name; both file sources expose ``_metadata``, so no
+    source file name (the file source exposes ``_metadata``), so no
     join is needed."""
     meta = F.create_map(
         *(
@@ -285,6 +287,7 @@ def ingest(
     input_dir: str,
     output_dir: str,
     run_id: str | None = None,
+    settle_s: float = 0.0,
 ) -> int:
     """Ingest every unprocessed CSV in input_dir into the curated
     partitioned-parquet store. Returns the number of files ingested.
@@ -299,6 +302,23 @@ def ingest(
     header signature (the column tuple), and each group is one scan
     and one partitioned write job, not one per file.
 
+    Settle guard: a CSV may still be being written when ingest runs.
+    A file whose mtime is within ±``settle_s`` of now is deferred
+    (abs(), so a producer whose clock runs ahead defers one run, not
+    forever), and with ``settle_s`` > 0 a file whose (size, mtime)
+    changed while the probes ran is deferred too. A deferred file
+    stays out of the ledger, so a later run ingests it. What still
+    slips through: a writer that stalls for longer than ``settle_s``
+    and writes nothing during the probes; only an atomic
+    upload-then-rename closes that (a rename keeps the finished
+    file's mtime, so it passes at once). The default 0.0 suits callers
+    whose files are complete before the call.
+
+    Poison files: every probed header must carry ``ClockDateTime``. A
+    file truncated inside its prelude (or with a foreign header row)
+    raises ValueError naming it before anything is written, so it
+    cannot leave earlier groups committed and block every later run.
+
     Crash-safety contract (exactly-once): a group's write lands in
     ``_pending/<txn>`` and is committed in three steps — (1) an
     atomically written intent file names the group's CSVs, (2) the
@@ -310,19 +330,28 @@ def ingest(
     are ingested again. One ingest per output_dir at a time: recovery
     treats every staging dir it finds as abandoned."""
     processed = _read_ledger(output_dir)
+    headers = _probe_settled(spark, input_dir, processed, settle_s)
+    bad = [p for p, h in headers.items() if "ClockDateTime" not in h.columns]
+    if bad:
+        raise ValueError(
+            f"no header row with ClockDateTime in {bad}; nothing was "
+            "ingested — repair or remove these files and run again"
+        )
     done = _recover(output_dir, processed)
-    todo = [f for f in list_input_files(input_dir) if os.path.basename(f) not in processed]
-    if not todo and not done:
+    groups: dict[tuple[str, ...], list[str]] = {}
+    for path, h in headers.items():
+        if os.path.basename(path) not in processed:  # not just recovered
+            groups.setdefault(tuple(h.columns), []).append(path)
+    if not groups and not done:
         return 0
 
-    headers = {os.path.basename(f): probe_header(spark, f) for f in todo}
-    groups: dict[tuple[str, ...], list[str]] = {}
-    for f in todo:
-        groups.setdefault(tuple(headers[os.path.basename(f)].columns), []).append(f)
     schema_df: DataFrame | None = None
     for columns, paths in groups.items():
         names = [os.path.basename(f) for f in paths]
-        df = curate(scan_csv(spark, paths, list(columns)), {n: headers[n] for n in names})
+        df = curate(
+            scan_csv(spark, paths, list(columns)),
+            {n: headers[p] for n, p in zip(names, paths)},
+        )
         txn = uuid.uuid4().hex
         df.write.partitionBy("Year", "Month", "Day").parquet(
             os.path.join(_pending_dir(output_dir), txn)
@@ -341,6 +370,35 @@ def ingest(
         export_schema_registry(schema_df, output_dir, run_id=run_id)
     append_ingest_log(output_dir, run_id or "batch", done)
     return len(done)
+
+
+def _probe_settled(
+    spark: SparkSession, input_dir: str, processed: set[str], settle_s: float
+) -> dict[str, SessionHeader]:
+    """Probe every CSV in input_dir that is not in the ledger and has
+    settled (``ingest`` states the guard); maps path → header."""
+    now = time.time()
+    first: dict[str, tuple[int, float]] = {}
+    for path in list_input_files(input_dir):
+        if os.path.basename(path) in processed:
+            continue
+        st = _stat(path)
+        if st is not None and abs(now - st[1]) >= settle_s:
+            first[path] = st
+    headers = {p: probe_header(spark, p) for p in first}
+    if settle_s > 0:
+        # second observation: drop files that moved across the probes
+        headers = {p: h for p, h in headers.items() if _stat(p) == first[p]}
+    return headers
+
+
+def _stat(path: str) -> tuple[int, float] | None:
+    """(size, mtime), or None for a file that vanished."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_size, st.st_mtime
 
 
 def _pending_dir(output_dir: str) -> str:

@@ -1,2 +1,1 @@
-"""Structured Streaming surface: incremental (availableNow) ingest and
-event-time windowed aggregation."""
+"""Structured Streaming surface: event-time windowed aggregation."""

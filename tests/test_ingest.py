@@ -3,7 +3,9 @@
 Pins: prelude skip, metadata extraction, the ×1e5 timestamp decode,
 partitioned write, ledger idempotency (the reference's
 read-union-append duplication bug #1 must NOT reproduce), schema
-registry, supercategory fold, wide→tidy melt.
+registry, supercategory fold, wide→tidy melt, the settle guard for
+files still being written, poison-header refusal, crash recovery and
+one ingest per event trigger.
 """
 
 from __future__ import annotations
@@ -327,3 +329,151 @@ def test_crashed_ingest_recovers_exactly_once(spark, tmp_path, monkeypatch, cras
     assert eeg_csv._read_ledger(out) == {os.path.basename(p) for p in paths}
     assert not os.path.exists(os.path.join(out, "_pending"))
     assert len(open(os.path.join(out, "ingest-log.csv")).read().splitlines()) == len(paths)
+
+
+def _backdate(src, seconds=7200):
+    for f in os.listdir(src):
+        p = os.path.join(src, f)
+        st = os.stat(p)
+        os.utime(p, (st.st_atime, st.st_mtime - seconds))
+
+
+def test_settle_guard_defers_inflight_files(spark, tmp_path):
+    """A CSV whose mtime is inside the settle window may still be being
+    written: it is deferred (kept out of the ledger), then ingested
+    once its mtime is old enough."""
+    src = str(tmp_path / "staging")
+    generate_corpus(src, n_patients=1, max_sessions=1,
+                    rows_per_session=20, n_signals=8, seed=5)
+    out = str(tmp_path / "curated")
+
+    assert eeg_csv.ingest(spark, src, out, settle_s=3600.0) == 0
+    assert eeg_csv._read_ledger(out) == set()
+
+    _backdate(src)
+    assert eeg_csv.ingest(spark, src, out, settle_s=3600.0) == 1
+    assert spark.read.parquet(os.path.join(out, "data")).count() == 20
+
+
+def test_settle_guard_defers_file_written_during_probes(spark, tmp_path, monkeypatch):
+    """Second observation: a file whose mtime passed the window but
+    whose (size, mtime) changes while the headers are probed is
+    deferred too; the next run picks it up."""
+    src = str(tmp_path / "staging")
+    paths = generate_corpus(src, n_patients=3, max_sessions=1,
+                            rows_per_session=20, n_signals=3, seed=8)
+    out = str(tmp_path / "curated")
+    _backdate(src)
+    growing = paths[1]
+    real = eeg_csv.probe_header
+
+    def probe_while_writing(spark, path):
+        if path == growing:
+            with open(growing, "a") as fh:
+                fh.write("\n")
+        return real(spark, path)
+
+    with monkeypatch.context() as m:
+        m.setattr(eeg_csv, "probe_header", probe_while_writing)
+        assert eeg_csv.ingest(spark, src, out, settle_s=60.0) == len(paths) - 1
+    assert os.path.basename(growing) not in eeg_csv._read_ledger(out)
+
+    _backdate(src)
+    assert eeg_csv.ingest(spark, src, out, settle_s=60.0) == 1
+    assert spark.read.parquet(os.path.join(out, "data")).count() == 20 * len(paths)
+
+
+def test_ingest_recovers_crashed_dir_and_odd_filenames(spark, tmp_path):
+    """A file named with a space lands next to an empty data/ left by
+    a crashed first run: the run ingests it with its metadata (the
+    lookup key is the decoded _metadata.file_name) instead of failing
+    on the empty dir."""
+    src = str(tmp_path / "staging")
+    generate_corpus(src, n_patients=1, max_sessions=1,
+                    rows_per_session=30, n_signals=8, seed=7)
+    [old] = os.listdir(src)
+    os.rename(os.path.join(src, old), os.path.join(src, "patient one.csv"))
+    out = str(tmp_path / "curated")
+    os.makedirs(os.path.join(out, "data"))  # crashed-run debris: no files
+
+    assert eeg_csv.ingest(spark, src, out) == 1
+    curated = spark.read.parquet(os.path.join(out, "data"))
+    assert curated.count() == 30
+    assert curated.filter(curated.PatientID.isNull()).count() == 0
+
+
+def test_curate_matches_encoded_names(spark, tmp_path):
+    """Metadata is looked up by the percent-encoded
+    _metadata.file_name: names with a space, a literal '%20' and a
+    '+' must all match their probed headers."""
+    src = str(tmp_path / "staging")
+    paths = generate_corpus(src, n_patients=3, max_sessions=1,
+                            rows_per_session=20, n_signals=3, seed=6)
+    for p, name in zip(paths, ["patient one.csv", "a%20b.csv", "c+d.csv"]):
+        os.rename(p, os.path.join(src, name))
+    out = str(tmp_path / "curated")
+    assert eeg_csv.ingest(spark, src, out) == 3
+
+    meta = spark.read.parquet(os.path.join(out, "data")).select(
+        F.count("*").alias("rows"),
+        F.count("PatientID").alias("ids"),
+        F.count("PatientBirthDate").alias("births"),
+        F.countDistinct("PatientID").alias("patients"),
+    ).first()
+    assert (meta.rows, meta.ids, meta.births, meta.patients) == (60, 60, 60, 3)
+
+
+def test_poison_header_refused_before_any_write(spark, tmp_path):
+    """A CSV truncated inside its 8-row prelude has no header row, and
+    one cut inside the header row lacks ClockDateTime. Ingest names
+    both in a ValueError before writing anything (no group committed,
+    no ledger), and once they are removed every good file lands."""
+    src = str(tmp_path / "staging")
+    paths = generate_corpus(src, n_patients=4, max_sessions=1,
+                            rows_per_session=20, n_signals=3, seed=12)
+    no_header, cut_header = paths[1], paths[3]
+    with open(no_header) as fh:
+        prelude = [next(fh) for _ in range(eeg_csv.PRELUDE_ROWS)]
+    with open(no_header, "w") as fh:
+        fh.write("".join(prelude[:5]))  # cut inside the metadata rows
+    with open(cut_header, "w") as fh:
+        fh.write("".join(prelude[:7]) + prelude[7][:5])  # row 8 is "Clock"
+    out = str(tmp_path / "curated")
+
+    with pytest.raises(ValueError, match="ClockDateTime") as exc:
+        eeg_csv.ingest(spark, src, out)
+    assert os.path.basename(no_header) in str(exc.value)
+    assert os.path.basename(cut_header) in str(exc.value)
+    assert not os.path.exists(os.path.join(out, "data"))
+    assert not os.path.exists(os.path.join(out, "_ingest_ledger.json"))
+
+    os.remove(no_header)
+    os.remove(cut_header)
+    assert eeg_csv.ingest(spark, src, out) == 2
+    assert spark.read.parquet(os.path.join(out, "data")).count() == 40
+
+
+def test_event_trigger_ingests_each_landing_once(spark, sf_dir):
+    """The event_trigger key: one ingest per trigger. The last file
+    lands alone on trigger 2; trigger 3 finds nothing new and adds no
+    file and no row."""
+    from data_pipeline_spark_spark import registry
+    from data_pipeline_spark_spark.operators.ingest_ops import fixture_dir
+
+    registry.load_all()
+    corpus = eeg_csv.list_input_files(fixture_dir())
+    rows_in = []
+    for p in corpus:
+        with open(p) as fh:
+            rows_in.append(sum(1 for _ in fh) - eeg_csv.PRELUDE_ROWS)
+    per_file, total = rows_in[-1], sum(rows_in)
+
+    rows = sorted(registry.QUERIES["event_trigger"](spark, sf_dir).collect())
+    assert [(r.trigger, r.files, r.curated_rows) for r in rows] == [
+        (1, len(corpus) - 1, total - per_file),
+        (2, 1, total),
+        (3, 0, total),
+    ]
+    assert rows[-1].n_patients == len(
+        {eeg_csv.probe_header(spark, p).metadata["PatientID"] for p in corpus}
+    )
