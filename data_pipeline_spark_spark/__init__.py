@@ -14,9 +14,9 @@ Layout:
     registry.py   named-query registry (the predefined-query API,
                   reference README.md:16)
     operators/    relational / window / scalar / dedup / similarity /
-                  text / multimodal query builders
-    sources/      EEG-session CSV ingest (reference sparkle-v9.py)
-    streaming/    incremental availableNow ingest + windowed aggs
+                  text / multimodal / streaming query builders
+    sources/      EEG-session CSV ingest and its commit log
+                  (reference sparkle-v9.py)
     functions/    vector & text-hash column helpers
 """
 

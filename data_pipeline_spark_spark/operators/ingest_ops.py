@@ -362,7 +362,7 @@ def tidy_store(spark: SparkSession) -> str:
         stage = tempfile.mkdtemp(prefix="dps_eeg_tidy_stage_")
         ingest_out = os.path.join(stage, "ingest")
         eeg_csv.ingest(spark, fixture_dir(), ingest_out, run_id="tidy-store")
-        wide = spark.read.parquet(os.path.join(ingest_out, "data"))
+        wide = eeg_csv.register_curated(spark, ingest_out, view="eeg_tidy_wide")
         wide.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(stage, "wide")
         )

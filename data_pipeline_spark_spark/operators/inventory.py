@@ -14,8 +14,6 @@ Reference citations per operator are on each function (SURVEY.md §2A).
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import shutil
 import tempfile
@@ -275,16 +273,14 @@ def parquet_write_part(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("schema_export")
 def schema_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-registry JSON export (reference write_schema_to_s3,
-    sparkle-v9.py:31-61): ingest → read the registry file back →
-    [{Name, Type}] rows."""
+    """Schema-registry export (reference write_schema_to_s3,
+    sparkle-v9.py:31-61): ingest → the [{Name, Type}] schema of the
+    newest commit-log version → rows."""
     out = tempfile.mkdtemp(prefix="dps_schema_exp_")
     try:
         eeg_csv.ingest(spark, fixture_dir(), out, run_id="schema-export")
-        reg = sorted(glob.glob(os.path.join(out, "_schema_registry", "*.json")))[-1]
-        with open(reg) as f:
-            payload = json.load(f)
-        rows = [(e["Name"], e["Type"]) for e in payload]
+        _, _, schema = eeg_csv.snapshot(out)
+        rows = [(c["Name"], c["Type"]) for c in schema]
         return spark.createDataFrame(rows, "name string, type string")
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -299,7 +295,7 @@ def empty_input_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tempfile.mkdtemp(prefix="dps_empty_out_")
     try:
         n = eeg_csv.ingest(spark, empty, out, run_id="guard")
-        wrote_data = os.path.exists(os.path.join(out, "data"))
+        wrote_data = eeg_csv.snapshot(out)[0] > 0
         return spark.createDataFrame(
             [(n, wrote_data, "skipped" if n == 0 else "ingested")],
             "n_files_ingested int, wrote_data boolean, status string",
@@ -320,9 +316,9 @@ def file_move_processed(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         src = fixture_dir()
         n1 = eeg_csv.ingest(spark, src, out, run_id="run1")
-        rows1 = spark.read.parquet(os.path.join(out, "data")).count()
+        rows1 = eeg_csv.register_curated(spark, out, view="eeg_ledger").count()
         n2 = eeg_csv.ingest(spark, src, out, run_id="run2")
-        rows2 = spark.read.parquet(os.path.join(out, "data")).count()
+        rows2 = eeg_csv.register_curated(spark, out, view="eeg_ledger").count()
         return spark.createDataFrame(
             [(1, n1, rows1), (2, n2, rows2)],
             "run int, n_files_ingested int, curated_rows long",
@@ -424,7 +420,7 @@ def event_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
             for p in landing:
                 shutil.copy(p, staging)
             files = eeg_csv.ingest(spark, staging, out, run_id=f"trigger-{trigger}")
-            store = spark.read.parquet(os.path.join(out, "data")).agg(
+            store = eeg_csv.register_curated(spark, out, view="eeg_trigger").agg(
                 F.count("*"),
                 F.countDistinct(F.when(F.col("PatientID") != "", F.col("PatientID"))),
             )
@@ -440,19 +436,17 @@ def event_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ingest_log")
 def ingest_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest run log (reference lambda-initiator-v2.py:47-65 appends
-    timestamp+filenames to a CSV log per trigger): one log line per
-    ingested file, re-read through a Spark CSV scan. Timestamps are
+    timestamp+filenames to a CSV log per trigger): one row per
+    ingested file, read from the commit log's entries. Timestamps are
     dropped for determinism."""
     out = tempfile.mkdtemp(prefix="dps_ingest_log_")
     try:
         eeg_csv.ingest(spark, fixture_dir(), out, run_id="logged-run")
-        log = (
-            spark.read.schema("ts string, run_id string, file string")
-            .csv(os.path.join(out, "ingest-log.csv"))
-            .select("run_id", "file")
-            .orderBy("file")
+        rows = sorted(
+            ((e["run_id"], name) for e in eeg_csv.read_log(out) for name in e["csv"]),
+            key=lambda r: r[1],
         )
-        return materialize(log)
+        return spark.createDataFrame(rows, "run_id string, file string")
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

@@ -5,9 +5,9 @@ The reference's ingest is event-triggered micro-batch (monthly
 uploads, reference README.md:10-11, lambda-initiator-v2.py:27-39);
 it has no continuous queries. Our engine exposes event-time tumbling /
 sliding windows via F.window, which is the SAME operator in batch and
-in Structured Streaming (streaming/ingest.py runs the streaming form
-with watermarks; this module registers the batch form the DuckDB
-oracle can verify with time_bucket).
+in Structured Streaming (``windowed_event_counts`` below runs the
+streaming form with watermarks; the registered keys are the batch form
+the DuckDB oracle can verify with time_bucket).
 
 Scale: window aggregation = groupBy(window, keys) → partial+final hash
 agg, shuffling only (window, key) pairs. Sliding windows multiply rows
@@ -16,10 +16,12 @@ by (length/slide) in the Expand — keep slide ≥ length/4 at 100 TB.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, pin_utc
 from ..registry import query
 
 
@@ -54,7 +56,7 @@ def _stamp_in_order(src: str, names: list[str]) -> None:
 def stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows per event_type. Identical
     code runs under readStream with a watermark (see
-    streaming/ingest.py::windowed_event_counts). The window total
+    ``windowed_event_counts``). The window total
     travels as exact integer milli-units with one final division
     (the [[rollup_reaggregate]] discipline; r16 self-review replaced
     a ROUND of an order-dependent float sum — the fixture's measures
@@ -70,6 +72,55 @@ def stream_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(1000.0)
             ).alias("total_value"),
         )
+        .select(
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+            "event_type",
+            "n_events",
+            "total_value",
+        )
+    )
+
+
+def windowed_event_counts(
+    spark: SparkSession,
+    events_path: str,
+    window: str = "1 hour",
+    watermark: str = "2 hours",
+) -> DataFrame:
+    """Event-time tumbling-window aggregation as a STREAM over the
+    events table (readStream on the parquet dir), with a watermark for
+    late data. The batch twin (``stream_window_agg``) is what the
+    DuckDB oracle verifies; this streaming form is exercised by tests
+    with a memory sink."""
+    # same nanosecond-timestamp shim as catalog.load: read TIMESTAMP(NANOS)
+    # as long nanos, floor to microseconds. Pin UTC first — the NTZ
+    # retag below is only a metadata no-op under a UTC session zone,
+    # and this entry point must not depend on catalog.load having
+    # already run on this session.
+    pin_utc(spark)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    batch_schema = spark.read.parquet(events_path).schema
+    # the streaming file source wants a DIRECTORY; narrow to the one
+    # table file with a glob filter
+    base_dir, file_name = os.path.split(events_path)
+    stream = (
+        spark.readStream.schema(batch_schema)
+        .option("pathGlobFilter", file_name)
+        .parquet(base_dir)
+    )
+    if dict(stream.dtypes).get("ts") == "bigint":
+        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
+        # fixture parquet with no UTC-adjustment flag reads as NTZ;
+        # withWatermark requires TIMESTAMP — retag under the UTC
+        # session pin (pure metadata, same microseconds; see
+        # catalog._ntz_to_ltz)
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return (
+        stream.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),

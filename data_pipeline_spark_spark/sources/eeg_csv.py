@@ -25,12 +25,16 @@ identical):
     schema build (all-double, v9)  → ONE schema-explicit CSV scan
     ``curate``: prelude skip, per-file metadata by file-name lookup,
                 ×1e5 timestamp decode, Year/Month/Day derivation
-    ONE partitioned write job      → staged, then committed (intent,
-                                     rename into data/, ledger)
-    schema-registry JSON export + ingest log, once per run
+    ONE partitioned write job      → staged in _pending/<txn>, part
+                                     files renamed into data/
+    ONE commit-log entry           → _log/<version>.json: CSV names,
+                                     txn, part files, merged schema
 
 ``ingest`` is the only writer of a curated store, and ``curate`` the
-only curated transform.
+only curated transform. The commit log is the store's only commit
+state: the processed-file ledger, the schema registry and the run log
+are all read from it, and ``snapshot`` / ``register_curated`` bind
+every reader to one committed version.
 
 Scale: the probe reads 8 rows per file; each group is one distributed
 scan whose splits never span files, and one shuffle-free write
@@ -226,52 +230,68 @@ def read_session(spark: SparkSession, path: str, header: SessionHeader | None = 
 
 
 # ---------------------------------------------------------------------------
-# batch ingest with ledger idempotency
+# the commit log: ``ingest`` appends to it, every reader binds to it
 # ---------------------------------------------------------------------------
 
 
-def _ledger_path(output_dir: str) -> str:
-    return os.path.join(output_dir, "_ingest_ledger.json")
+def _log_dir(output_dir: str) -> str:
+    return os.path.join(output_dir, "_log")
+
+
+def _data_dir(output_dir: str) -> str:
+    return os.path.join(output_dir, "data")
+
+
+def read_log(output_dir: str) -> list[dict]:
+    """The store's commit log, oldest entry first. Entry ``v`` is
+    ``_log/<v>.json``: version, run_id, ts, the CSV names (``csv``),
+    the staged ``txn``, the part ``files`` it added (relative to
+    ``data/``) and the store's merged ``schema`` after it."""
+    try:
+        names = os.listdir(_log_dir(output_dir))
+    except FileNotFoundError:
+        return []
+    entries = []
+    for v in sorted(int(n[: -len(".json")]) for n in names if n.endswith(".json")):
+        with open(os.path.join(_log_dir(output_dir), f"{v}.json")) as f:
+            entries.append(json.load(f))
+    return entries
+
+
+def snapshot(output_dir: str) -> tuple[int, list[str], list[dict]]:
+    """The newest committed version of the store: (version, its part
+    file paths, its [{Name, Type}] schema); version 0 is the empty
+    store. A commit's files are in ``data/`` before its log entry is
+    written and a committed file is never deleted, so every file of a
+    snapshot stays readable."""
+    entries = read_log(output_dir)
+    if not entries:
+        return 0, [], []
+    files = [os.path.join(_data_dir(output_dir), f) for e in entries for f in e["files"]]
+    return entries[-1]["version"], files, entries[-1]["schema"]
 
 
 def _read_ledger(output_dir: str) -> set[str]:
-    try:
-        with open(_ledger_path(output_dir)) as f:
-            return set(json.load(f))
-    except (FileNotFoundError, json.JSONDecodeError):
-        return set()
+    """The processed-file ledger: every CSV a committed version holds."""
+    return {n for e in read_log(output_dir) for n in e["csv"]}
 
 
-def _write_ledger(output_dir: str, processed: set[str]) -> None:
-    _write_json(_ledger_path(output_dir), sorted(processed))
+def _write_ledger(output_dir: str, entry: dict) -> None:
+    """The commit point: write log entry ``entry["version"]`` by atomic
+    replace, so a crash mid-dump leaves only a .tmp file, which
+    ``read_log`` ignores, never a partial entry."""
+    target = os.path.join(_log_dir(output_dir), f"{entry['version']}.json")
+    os.makedirs(_log_dir(output_dir), exist_ok=True)
+    with open(target + ".tmp", "w") as f:
+        json.dump(entry, f, indent=1)
+    os.replace(target + ".tmp", target)
 
 
-def _write_json(target: str, payload) -> None:
-    """Atomic replace: writing in place with mode 'w' truncates first,
-    so a crash mid-dump would leave an empty/partial JSON — for the
-    ledger, one that _read_ledger treats as 'nothing processed', and
-    the next run would re-append EVERY file (r8 review)."""
-    os.makedirs(os.path.dirname(target), exist_ok=True)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f, indent=1)
-    os.replace(tmp, target)
-
-
-def export_schema_registry(df: DataFrame, output_dir: str, run_id: str | None = None) -> str:
-    """Serialize the curated schema as [{Name, Type}] JSON beside the
-    table (reference write_schema_to_s3, sparkle-v9.py:31-61) — the
+def export_schema_registry(schema: T.StructType) -> list[dict]:
+    """A curated schema as [{Name, Type}] (reference write_schema_to_s3,
+    sparkle-v9.py:31-61), the form each log entry carries: the
     registry the catalog layer reads instead of re-crawling."""
-    run_id = run_id or time.strftime("%Y%m%d-%H%M%S")
-    reg_dir = os.path.join(output_dir, "_schema_registry")
-    os.makedirs(reg_dir, exist_ok=True)
-    out = os.path.join(reg_dir, f"schema-{run_id}.json")
-    payload = [
-        {"Name": f.name, "Type": f.dataType.simpleString()} for f in df.schema.fields
-    ]
-    with open(out, "w") as f:
-        json.dump(payload, f, indent=1)
-    return out
+    return [{"Name": f.name, "Type": f.dataType.simpleString()} for f in schema.fields]
 
 
 def list_input_files(input_dir: str) -> list[str]:
@@ -292,15 +312,15 @@ def ingest(
     """Ingest every unprocessed CSV in input_dir into the curated
     partitioned-parquet store. Returns the number of files ingested.
 
-    Idempotent: a processed-file ledger replaces the reference's
-    .OK-sentinel + move-to-processed choreography
-    (lambda-initiator-v2.py:27-69, sparkle-v9.py:19-29); re-running
-    over the same staging dir is a no-op (empty-input guard — the v5
-    fix, reference sparkle-v5.py:43-46).
+    Idempotent: the processed-file ledger (the CSV names in the commit
+    log) replaces the reference's .OK-sentinel + move-to-processed
+    choreography (lambda-initiator-v2.py:27-69, sparkle-v9.py:19-29);
+    re-running over the same staging dir is a no-op (empty-input
+    guard — the v5 fix, reference sparkle-v5.py:43-46).
 
     Batched: each file's prelude is probed once, files are grouped by
-    header signature (the column tuple), and each group is one scan
-    and one partitioned write job, not one per file.
+    header signature (the column tuple), and each group is one scan,
+    one partitioned write job and one commit-log version.
 
     Settle guard: a CSV may still be being written when ingest runs.
     A file whose mtime is within ±``settle_s`` of now is deferred
@@ -320,16 +340,18 @@ def ingest(
     cannot leave earlier groups committed and block every later run.
 
     Crash-safety contract (exactly-once): a group's write lands in
-    ``_pending/<txn>`` and is committed in three steps — (1) an
-    atomically written intent file names the group's CSVs, (2) the
-    part files are renamed into ``data/``, (3) the ledger is written,
-    then the intent and the staging dir are removed. Every call first
-    recovers unfinished transactions: one with an intent file is rolled
-    forward (renames are idempotent, the ledger update is a set
-    union), one without is discarded and its CSVs, not in the ledger,
-    are ingested again. One ingest per output_dir at a time: recovery
-    treats every staging dir it finds as abandoned."""
-    processed = _read_ledger(output_dir)
+    ``_pending/<txn>``, its part files are renamed into ``data/``, and
+    then ``_log/<version>.json`` is written atomically; that write is
+    the commit point, and the stage is deleted after it. Every call
+    first rolls back what a crashed run left: a stage the log names is
+    deleted; a stage it does not name first has the part files it
+    already renamed removed from ``data/`` (only in that stage's
+    partition dirs, and never a file the log names), and its CSVs,
+    absent from the ledger, are ingested again. One ingest per
+    output_dir at a time: recovery treats every staging dir it finds
+    as abandoned."""
+    entries = read_log(output_dir)
+    processed = {n for e in entries for n in e["csv"]}
     headers = _probe_settled(spark, input_dir, processed, settle_s)
     bad = [p for p, h in headers.items() if "ClockDateTime" not in h.columns]
     if bad:
@@ -337,15 +359,12 @@ def ingest(
             f"no header row with ClockDateTime in {bad}; nothing was "
             "ingested — repair or remove these files and run again"
         )
-    done = _recover(output_dir, processed)
+    _recover(output_dir, entries)
     groups: dict[tuple[str, ...], list[str]] = {}
     for path, h in headers.items():
-        if os.path.basename(path) not in processed:  # not just recovered
-            groups.setdefault(tuple(h.columns), []).append(path)
-    if not groups and not done:
-        return 0
+        groups.setdefault(tuple(h.columns), []).append(path)
 
-    schema_df: DataFrame | None = None
+    version, schema = (entries[-1]["version"], entries[-1]["schema"]) if entries else (0, [])
     for columns, paths in groups.items():
         names = [os.path.basename(f) for f in paths]
         df = curate(
@@ -353,23 +372,25 @@ def ingest(
             {n: headers[p] for n, p in zip(names, paths)},
         )
         txn = uuid.uuid4().hex
-        df.write.partitionBy("Year", "Month", "Day").parquet(
-            os.path.join(_pending_dir(output_dir), txn)
-        )
-        _write_json(_intent_path(output_dir, txn), names)
-        _roll_forward(output_dir, txn, names, processed)
-        done += names
-        empty = df.limit(0)
-        schema_df = (
-            empty
-            if schema_df is None
-            else schema_df.unionByName(empty, allowMissingColumns=True)
-        )
-    if schema_df is not None:
+        stage = os.path.join(_pending_dir(output_dir), txn)
+        df.write.partitionBy("Year", "Month", "Day").parquet(stage)
+        files = _publish(stage, _data_dir(output_dir))
+        known = {c["Name"] for c in schema}
+        schema = schema + [c for c in export_schema_registry(df.schema) if c["Name"] not in known]
+        version += 1
+        _write_ledger(output_dir, {
+            "version": version,
+            "run_id": run_id,
+            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "csv": names,
+            "txn": txn,
+            "files": files,
+            "schema": schema,
+        })
+        shutil.rmtree(stage)
+    if groups:
         os.rmdir(_pending_dir(output_dir))  # every staging dir committed
-        export_schema_registry(schema_df, output_dir, run_id=run_id)
-    append_ingest_log(output_dir, run_id or "batch", done)
-    return len(done)
+    return sum(len(paths) for paths in groups.values())
 
 
 def _probe_settled(
@@ -407,69 +428,60 @@ def _pending_dir(output_dir: str) -> str:
     return os.path.join(output_dir, "_pending")
 
 
-def _intent_path(output_dir: str, txn: str) -> str:
-    return os.path.join(_pending_dir(output_dir), f"{txn}.intent.json")
-
-
-def _roll_forward(output_dir: str, txn: str, names: list[str], processed: set[str]) -> None:
-    """Steps 2 and 3 of the commit; safe to repeat after a crash at
-    any point inside them."""
-    stage = os.path.join(_pending_dir(output_dir), txn)
-    data_dir = os.path.join(output_dir, "data")
-    for root, _, files in os.walk(stage):
+def _publish(stage: str, data_dir: str) -> list[str]:
+    """Rename a stage's part files into ``data/`` under the same
+    Year=/Month=/Day= dirs; returns them relative to ``data/``. The
+    writer's .crc side files stay behind and go with the stage."""
+    files = []
+    for root, _, names in os.walk(stage):
         rel = os.path.relpath(root, stage)
-        if rel == os.curdir:
-            continue  # the job's _SUCCESS marker, not data
-        os.makedirs(os.path.join(data_dir, rel), exist_ok=True)
-        for f in files:
-            # part names carry the write job's UUID: never a clash
-            os.replace(os.path.join(root, f), os.path.join(data_dir, rel, f))
-    processed.update(names)
-    _write_ledger(output_dir, processed)
-    os.remove(_intent_path(output_dir, txn))
-    shutil.rmtree(stage)
+        for n in names:
+            if n.endswith(".parquet"):
+                os.makedirs(os.path.join(data_dir, rel), exist_ok=True)
+                # part names carry the write job's UUID: never a clash
+                os.replace(os.path.join(root, n), os.path.join(data_dir, rel, n))
+                files.append(os.path.join(rel, n))
+    return sorted(files)
 
 
-def _recover(output_dir: str, processed: set[str]) -> list[str]:
-    """Finish every committed transaction left by a crashed run and
-    discard the uncommitted ones; returns the CSV names committed."""
+def _recover(output_dir: str, entries: list[dict]) -> None:
+    """Roll back what a crashed run left in ``_pending``: a stage the
+    log names was committed and is only deleted; one it does not name
+    first has the part files it already renamed into ``data/``
+    removed. Only that stage's partition dirs are looked at, and a
+    file the log names is never removed."""
     pending = _pending_dir(output_dir)
     if not os.path.isdir(pending):
-        return []
-    done: list[str] = []
-    for entry in sorted(os.listdir(pending)):
-        if entry.endswith(".intent.json"):
-            with open(os.path.join(pending, entry)) as f:
-                names = json.load(f)
-            _roll_forward(output_dir, entry[: -len(".intent.json")], names, processed)
-            done += names
-    shutil.rmtree(pending)  # staging dirs without an intent, temp files
-    return done
-
-
-def append_ingest_log(output_dir: str, run_id: str, files: list[str]) -> str:
-    """Append one line per ingested file to the run log (reference
-    lambda-initiator-v2.py:47-65 logged filenames + timestamp to a
-    CSV log on every trigger)."""
-    # NOT underscore-prefixed: Hadoop's hidden-file filter silently
-    # excludes _*/.* paths from reads, and the log must be scannable.
-    log_path = os.path.join(output_dir, "ingest-log.csv")
-    stamp = time.strftime("%Y-%m-%dT%H:%M:%S")
-    with open(log_path, "a") as f:
-        for name in files:
-            f.write(f"{stamp},{run_id},{name}\n")
-    return log_path
+        return
+    committed = {f for e in entries for f in e["files"]}
+    for txn in set(os.listdir(pending)) - {e["txn"] for e in entries}:
+        stage = os.path.join(pending, txn)
+        for root, _, _ in os.walk(stage):
+            rel = os.path.relpath(root, stage)
+            target = os.path.join(_data_dir(output_dir), rel)
+            if not os.path.isdir(target):
+                continue
+            for n in os.listdir(target):
+                if n.endswith(".parquet") and os.path.join(rel, n) not in committed:
+                    os.remove(os.path.join(target, n))
+    shutil.rmtree(pending)
 
 
 def register_curated(spark: SparkSession, output_dir: str, view: str = "eeg") -> DataFrame:
-    """Catalog sync: expose the curated store to SQL (replaces the
-    reference's Glue crawler step, emr-no-vpc.py:159-169).
+    """Catalog sync: expose the newest committed version of the
+    curated store to SQL (replaces the reference's Glue crawler step,
+    emr-no-vpc.py:159-169). The read is bound to a ``snapshot``: part
+    files and schema come from the commit log, so Spark neither lists
+    ``data/`` nor reads footers to plan it, and a commit in flight
+    stays invisible until its log entry lands.
 
-    Merges the part files' schemas: the channel set drifts between
-    monthly batches, and an unmerged read takes its schema from the
-    path-sorted first part file, dropping every column a later batch
-    added."""
-    df = spark.read.option("mergeSchema", "true").parquet(os.path.join(output_dir, "data"))
+    The schema is the union over every commit, so a channel a later
+    batch added is a column (null in older rows). Column order: the
+    first commit's columns, then each column a later commit added, in
+    commit order, then the Year/Month/Day partition columns last."""
+    _, files, schema = snapshot(output_dir)
+    ddl = ", ".join(f"`{c['Name'].replace('`', '``')}` {c['Type']}" for c in schema)
+    df = spark.read.schema(ddl).option("basePath", _data_dir(output_dir)).parquet(*files)
     df.createOrReplaceTempView(view)
     return df
 

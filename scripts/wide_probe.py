@@ -117,7 +117,7 @@ def main() -> None:
     eeg_csv.ingest(spark, raw, curated)
     emit(step="ingest_to_parquet", sec=round(time.time() - t0, 1))
 
-    pq = spark.read.parquet(os.path.join(curated, "data"))
+    pq = eeg_csv.register_curated(spark, curated, view="wide_probe")
     emit(
         step="parquet_narrow_agg",
         sec=timed(

@@ -11,8 +11,10 @@ one ingest per event trigger.
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
+import shutil
+import threading
+import time
 
 import pytest
 
@@ -114,10 +116,7 @@ def test_partitioned_layout_and_registry(spark, corpus, tmp_path):
     # hive partition dirs Year=/Month=/Day= (reference sparkle-v9.py:136-138)
     years = [p for p in os.listdir(os.path.join(out, "data")) if p.startswith("Year=")]
     assert years
-    reg_dir = os.path.join(out, "_schema_registry")
-    files = os.listdir(reg_dir)
-    assert files
-    payload = json.load(open(os.path.join(reg_dir, files[0])))
+    _, _, payload = eeg_csv.snapshot(out)
     names = {e["Name"] for e in payload}
     assert {"Timestamp", "PatientID", "ClockDateTime"} <= names
     assert all({"Name", "Type"} <= set(e) for e in payload)
@@ -167,11 +166,10 @@ def test_ingest_log(spark, corpus, tmp_path):
     src, paths = corpus
     out = str(tmp_path / "curated")
     eeg_csv.ingest(spark, src, out, run_id="logrun")
-    log = os.path.join(out, "ingest-log.csv")
-    lines = open(log).read().strip().splitlines()
+    logged = [(e["run_id"], n) for e in eeg_csv.read_log(out) for n in e["csv"]]
     # other tests may have appended files to the shared corpus dir
-    assert len(lines) == len(eeg_csv.list_input_files(src))
-    assert all(",logrun," in line for line in lines)
+    assert len(logged) == len(eeg_csv.list_input_files(src))
+    assert all(run_id == "logrun" for run_id, _ in logged)
 
 
 def test_cast_by_prefix_single_projection(spark):
@@ -271,8 +269,8 @@ def _crash_after_write(monkeypatch):
     real = os.replace
 
     def replace(src, dst):
-        if dst.endswith(".intent.json"):
-            raise OSError("crash before the intent file")
+        if f"{os.sep}_log{os.sep}" in dst:
+            raise OSError("crash on the log-entry write, after every rename")
         real(src, dst)
 
     monkeypatch.setattr(os, "replace", replace)
@@ -295,8 +293,8 @@ def _crash_mid_rename(monkeypatch):
 def _crash_after_ledger(monkeypatch):
     real = eeg_csv._write_ledger
 
-    def write_ledger(output_dir, processed):
-        real(output_dir, processed)
+    def write_ledger(output_dir, entry):
+        real(output_dir, entry)
         raise OSError("crash before cleanup")
 
     monkeypatch.setattr(eeg_csv, "_write_ledger", write_ledger)
@@ -309,7 +307,9 @@ def _crash_after_ledger(monkeypatch):
 def test_crashed_ingest_recovers_exactly_once(spark, tmp_path, monkeypatch, crash):
     """A crash at any point of the staged commit, then a clean run:
     every CSV's rows are in the store exactly once, and the ledger
-    names every CSV."""
+    names every CSV. The log entry is the commit point: a crash before
+    it is rolled back and the recovery run ingests every CSV again; a
+    crash after it leaves nothing for the recovery run to ingest."""
     src = str(tmp_path / "staging")
     out = str(tmp_path / "curated")
     paths = generate_corpus(src, n_patients=3, max_sessions=1, rows_per_session=20,
@@ -318,17 +318,120 @@ def test_crashed_ingest_recovers_exactly_once(spark, tmp_path, monkeypatch, cras
         crash(m)
         with pytest.raises(OSError, match="crash"):
             eeg_csv.ingest(spark, src, out, run_id="crashed")
-    pending = os.listdir(os.path.join(out, "_pending"))
-    assert any(p.endswith(".intent.json") for p in pending) == (crash is not _crash_after_write)
+    [staged] = os.listdir(os.path.join(out, "_pending"))
+    logged = {e["txn"] for e in eeg_csv.read_log(out)}
+    assert (staged in logged) == (crash is _crash_after_ledger)
 
-    assert eeg_csv.ingest(spark, src, out, run_id="recovery") == len(paths)
+    recovered = 0 if crash is _crash_after_ledger else len(paths)
+    assert eeg_csv.ingest(spark, src, out, run_id="recovery") == recovered
     assert eeg_csv.ingest(spark, src, out, run_id="rerun") == 0
     store = spark.read.parquet(os.path.join(out, "data"))
     assert store.count() == 20 * len(paths)
     assert store.select("PatientID", "Time").distinct().count() == 20 * len(paths)
     assert eeg_csv._read_ledger(out) == {os.path.basename(p) for p in paths}
     assert not os.path.exists(os.path.join(out, "_pending"))
-    assert len(open(os.path.join(out, "ingest-log.csv")).read().splitlines()) == len(paths)
+    assert sorted(n for e in eeg_csv.read_log(out) for n in e["csv"]) == sorted(
+        os.path.basename(p) for p in paths
+    )
+
+
+def test_reader_never_sees_part_of_a_commit(spark, tmp_path, monkeypatch):
+    """A view registered after each rename of a group's part files into
+    data/ shows the store before the group or after it, never a part
+    of it: the rows of a version that was never committed."""
+    src = str(tmp_path / "staging")
+    out = str(tmp_path / "curated")
+    generate_corpus(src, n_patients=2, max_sessions=1, rows_per_session=20,
+                    n_signals=3, seed=9)
+    assert eeg_csv.ingest(spark, src, out) == 2
+    generate_corpus(src, n_patients=2, max_sessions=1, rows_per_session=20,
+                    n_signals=3, seed=10, patient_offset=2)
+    real = os.replace
+    seen = []
+
+    def replace(src, dst):
+        real(src, dst)
+        if f"{os.sep}data{os.sep}" in dst:
+            seen.append(eeg_csv.register_curated(spark, out, view="eeg_torn").count())
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", replace)
+        assert eeg_csv.ingest(spark, src, out) == 2
+    assert len(seen) >= 2  # a reader ran between two renames of one group
+    assert set(seen) <= {40, 80}
+    assert eeg_csv.register_curated(spark, out, view="eeg_torn").count() == 80
+
+
+def test_concurrent_queries_see_only_committed_versions(spark, tmp_path, monkeypatch):
+    """An ingest thread lands three batches while a query thread
+    registers its own view and counts, over and over. Each rename into
+    data/ is slowed, as on an object store where a rename is a copy.
+    Every count is the total of some committed version."""
+    staging = str(tmp_path / "staging")
+    out = str(tmp_path / "curated")
+    batches = [
+        generate_corpus(str(tmp_path / f"batch{i}"), n_patients=2, max_sessions=1,
+                        rows_per_session=20, n_signals=3, seed=20 + i, patient_offset=2 * i)
+        for i in range(4)
+    ]
+    os.makedirs(staging)
+    for p in batches[0]:
+        shutil.copy(p, staging)
+    eeg_csv.ingest(spark, staging, out)
+    real = os.replace
+
+    def slow_replace(src, dst):
+        real(src, dst)
+        if f"{os.sep}data{os.sep}" in dst:
+            time.sleep(0.3)
+
+    monkeypatch.setattr(os, "replace", slow_replace)
+    done, errors = threading.Event(), []
+
+    def land_batches():
+        try:
+            for batch in batches[1:]:
+                for p in batch:
+                    shutil.copy(p, staging)
+                eeg_csv.ingest(spark, staging, out)
+                eeg_csv.register_curated(spark, out, view="eeg_ingest_side")
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+        finally:
+            done.set()
+
+    writer = threading.Thread(target=land_batches)
+    writer.start()
+    counts, deadline = [], time.monotonic() + 300
+    while not done.is_set() and time.monotonic() < deadline:
+        eeg_csv.register_curated(spark, out, view="eeg_query_side")
+        counts.append(spark.sql("SELECT COUNT(*) FROM eeg_query_side").first()[0])
+    writer.join(timeout=60)
+    assert not writer.is_alive()
+    assert errors == []
+    assert counts and set(counts) <= {40 * v for v in range(1, len(batches) + 1)}
+    assert eeg_csv.snapshot(out)[0] == len(batches)
+
+
+def test_version_bumps_once_per_header_group(spark, tmp_path):
+    """Two header signatures are two commits; a no-op run commits
+    nothing; a later one-signature batch is one more."""
+    src = str(tmp_path / "staging")
+    out = str(tmp_path / "curated")
+    generate_corpus(src, n_patients=2, max_sessions=1, rows_per_session=20,
+                    n_signals=2, seed=2)
+    generate_corpus(src, n_patients=2, max_sessions=1, rows_per_session=20,
+                    n_signals=3, seed=3, patient_offset=10)
+    assert eeg_csv.snapshot(out) == (0, [], [])
+    versions = []
+    for extra in (None, None, 20):
+        if extra is not None:
+            generate_corpus(src, n_patients=1, max_sessions=1, rows_per_session=20,
+                            n_signals=3, seed=4, patient_offset=extra)
+        eeg_csv.ingest(spark, src, out)
+        versions.append(eeg_csv.snapshot(out)[0])
+    assert versions == [2, 2, 3]
+    assert [e["version"] for e in eeg_csv.read_log(out)] == [1, 2, 3]
 
 
 def _backdate(src, seconds=7200):
@@ -445,7 +548,7 @@ def test_poison_header_refused_before_any_write(spark, tmp_path):
     assert os.path.basename(no_header) in str(exc.value)
     assert os.path.basename(cut_header) in str(exc.value)
     assert not os.path.exists(os.path.join(out, "data"))
-    assert not os.path.exists(os.path.join(out, "_ingest_ledger.json"))
+    assert eeg_csv._read_ledger(out) == set()
 
     os.remove(no_header)
     os.remove(cut_header)

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import os
 
-from data_pipeline_spark_spark.streaming.ingest import windowed_event_counts
+from data_pipeline_spark_spark.operators.streaming_batch import windowed_event_counts
 
 
 def test_windowed_stream_matches_batch(spark, sf_dir):
